@@ -1,7 +1,5 @@
 package graft.functions
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -37,9 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * pressure, replacing the reference's warn-and-hope spill handling
   * (`hashset-count.cc:200-205`).
   *
-  * Values are stored as owned `UTF8String` copies: `child.eval` can return
-  * a string backed by a reused row buffer, so the first sighting of each
-  * distinct value is cloned (duplicates never allocate).
+  * The buffer is a [[DistinctSet]]: one byte arena laid out as the
+  * [[SketchWire]] frame plus an open-addressing index, so a value costs
+  * no object of its own. `child.eval` can return a string backed by a
+  * reused row buffer; its bytes are copied into the arena on the first
+  * sighting only, and duplicates allocate nothing.
   */
 case class HashSetCountDistinct(
     child: Expression,
@@ -47,15 +47,13 @@ case class HashSetCountDistinct(
     inputAggBufferOffset: Int = 0)
     extends HashSetAggBase with UnaryLike[Expression] {
 
-  override def update(
-      buf: mutable.HashSet[UTF8String],
-      input: InternalRow): mutable.HashSet[UTF8String] = {
+  override def update(buf: DistinctSet, input: InternalRow): DistinctSet = {
     val v = child.eval(input)
-    if (v != null) addOwned(buf, v.asInstanceOf[UTF8String])
+    if (v != null) buf.add(v.asInstanceOf[UTF8String])
     buf
   }
 
-  override def eval(buf: mutable.HashSet[UTF8String]): Any =
+  override def eval(buf: DistinctSet): Any =
     if (buf.isEmpty) null else UTF8String.fromString(buf.size.toString)
 
   override def dataType: DataType = StringType

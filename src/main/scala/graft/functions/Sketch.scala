@@ -1,6 +1,7 @@
 package graft.functions
 
-import java.nio.ByteBuffer
+import java.nio.ByteOrder
+import java.util.Arrays
 
 import scala.collection.mutable
 
@@ -12,102 +13,141 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's exact-distinct-set wire format, shared by the in-query
   * aggregate ([[HashSetCountDistinct]]) and the PERSISTABLE sketch
   * column surface ([[SketchAgg]]/[[SketchMergeAgg]]/[[SketchCount]]).
   *
-  * Layout: `[int32 n] ([int32 len] [len bytes])*` — framed, compact,
-  * order-free. The reference's serialized 'D' form kept values in
-  * bucket order only so its delimited-string merge could stream
+  * Layout: `[int32 n] ([int32 len] [len bytes])*`, big-endian — framed,
+  * compact, order-free. The reference's serialized 'D' form kept values
+  * in bucket order only so its delimited-string merge could stream
   * (`/root/reference/hashset-count.cc:226-247`, `README.md:38-41`);
   * a framed format needs no ordering invariant and is `'\0'`-safe
   * where the reference documents silent corruption (`README.md:9`).
+  *
+  * This object is the one codec: [[DistinctSet]] (the aggregates'
+  * buffer) and the `mutable.HashSet` entry points below write frames
+  * with [[putFrame]] and read them with [[foreachValue]].
   */
 object SketchWire {
 
+  /** The largest frame one JVM array can hold. */
+  private[functions] val MaxBytes: Int = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH
+
+  private val littleEndian = ByteOrder.nativeOrder() == ByteOrder.LITTLE_ENDIAN
+
   def serialize(buf: mutable.HashSet[UTF8String]): Array[Byte] = {
-    var total = 4
+    var total = 4L
     buf.foreach(s => total += 4 + s.numBytes())
-    val bb = ByteBuffer.allocate(total)
-    bb.putInt(buf.size)
-    buf.foreach { s =>
-      val bytes = s.getBytes
-      bb.putInt(bytes.length)
-      bb.put(bytes)
-    }
-    bb.array()
+    val out = new Array[Byte](checkedLength(total))
+    putInt(out, 0, buf.size)
+    var at = 4
+    buf.foreach(s => at = putFrame(out, at, s.getBaseObject, s.getBaseOffset, s.numBytes()))
+    out
   }
 
-  def deserialize(bytes: Array[Byte]): mutable.HashSet[UTF8String] =
-    mergeInto(new mutable.HashSet[UTF8String], bytes)
-
-  /** Union a serialized set into a live buffer (no intermediate set). */
+  /** Union a serialized set into a live buffer (no intermediate set);
+    * each new value is an owned copy.
+    */
   def mergeInto(
       buf: mutable.HashSet[UTF8String],
       bytes: Array[Byte]): mutable.HashSet[UTF8String] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    buf.sizeHint(buf.size + n)
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      buf += UTF8String.fromBytes(arr)
-      i += 1
+    buf.sizeHint(buf.size + sizeHint(bytes))
+    foreachValue(bytes) { (at, len) =>
+      buf += UTF8String.fromBytes(Arrays.copyOfRange(bytes, at, at + len))
     }
     buf
   }
 
   /** Distinct count carried by a serialized sketch — the leading int32;
-    * the values themselves are never touched. Malformed input (fewer
-    * than 4 bytes) fails loudly rather than reading garbage.
+    * the values themselves are never touched. A header that cannot be
+    * one (fewer than 4 bytes, a negative count) fails loudly rather
+    * than reading garbage.
     */
   def count(bytes: Array[Byte]): Int = {
     if (bytes == null || bytes.length < 4)
-      throw new IllegalArgumentException(
-        s"not a graft sketch: ${if (bytes == null) "null" else s"${bytes.length} bytes"}")
-    ByteBuffer.wrap(bytes).getInt
+      malformed(if (bytes == null) "null" else s"${bytes.length} bytes")
+    val n = getInt(bytes, 0)
+    if (n < 0) malformed(s"negative count $n")
+    n
   }
+
+  /** The frame reader: `f(at, len)` for each value, `at` being the
+    * offset of its bytes in `bytes`. A truncated frame, a negative
+    * length or bytes after the n-th frame throw
+    * `IllegalArgumentException("not a graft sketch: …")` — after `f`
+    * has seen the frames before the fault.
+    */
+  private[functions] def foreachValue(bytes: Array[Byte])(f: (Int, Int) => Unit): Unit = {
+    val n = count(bytes)
+    var at = 4
+    var i = 0
+    while (i < n) {
+      if (bytes.length - at < 4)
+        malformed(s"value ${i + 1} of $n truncated at byte $at of ${bytes.length}")
+      val len = getInt(bytes, at)
+      if (len < 0) malformed(s"value ${i + 1} of $n has negative length $len")
+      if (bytes.length - at - 4 < len)
+        malformed(s"value ${i + 1} of $n (length $len) truncated at byte $at of ${bytes.length}")
+      f(at + 4, len)
+      at += 4 + len
+      i += 1
+    }
+    if (at != bytes.length)
+      malformed(s"${bytes.length - at} trailing bytes after $n values")
+  }
+
+  /** Presizing hint: the header count, capped at what the bytes could
+    * hold (each value takes at least 4), so a corrupt count cannot force
+    * a huge allocation.
+    */
+  private[functions] def sizeHint(bytes: Array[Byte]): Int =
+    math.min(count(bytes), bytes.length / 4)
+
+  /** `total` as an array length, or a clear error past [[MaxBytes]]. */
+  private[functions] def checkedLength(total: Long): Int =
+    if (total <= MaxBytes) total.toInt
+    else throw new IllegalStateException(
+      s"graft sketch too large: $total bytes exceeds the $MaxBytes-byte frame limit")
+
+  /** Write one `[len][bytes]` frame at `at`; returns the offset after it. */
+  private[functions] def putFrame(
+      dst: Array[Byte], at: Int, base: AnyRef, off: Long, len: Int): Int = {
+    putInt(dst, at, len)
+    Platform.copyMemory(base, off, dst, Platform.BYTE_ARRAY_OFFSET + at + 4, len)
+    at + 4 + len
+  }
+
+  private[functions] def getInt(b: Array[Byte], at: Int): Int = {
+    val v = Platform.getInt(b, Platform.BYTE_ARRAY_OFFSET + at)
+    if (littleEndian) Integer.reverseBytes(v) else v
+  }
+
+  private[functions] def putInt(b: Array[Byte], at: Int, v: Int): Unit =
+    Platform.putInt(b, Platform.BYTE_ARRAY_OFFSET + at,
+      if (littleEndian) Integer.reverseBytes(v) else v)
+
+  private def malformed(why: String): Nothing =
+    throw new IllegalArgumentException(s"not a graft sketch: $why")
 }
 
-/** Shared buffer lifecycle for hash-set aggregates: empty-set init,
-  * size-aware union merge, [[SketchWire]] shuffle format, and the
-  * copy-on-first-sighting update (`child.eval` can return a string
-  * backed by a reused row buffer, so the first sighting of each
-  * distinct value is cloned — duplicates never allocate).
+/** Shared buffer lifecycle of the distinct-set aggregates: a
+  * [[DistinctSet]] buffer (values copied on first sighting, duplicates
+  * allocate nothing), size-aware union merge, and the [[SketchWire]]
+  * frame as the shuffle and state-store format.
   */
-private[functions] trait HashSetAggBase
-    extends TypedImperativeAggregate[mutable.HashSet[UTF8String]] {
+private[functions] trait HashSetAggBase extends TypedImperativeAggregate[DistinctSet] {
 
-  override def createAggregationBuffer(): mutable.HashSet[UTF8String] =
-    mutable.HashSet.empty
+  override def createAggregationBuffer(): DistinctSet = DistinctSet.empty
 
-  override def merge(
-      buf: mutable.HashSet[UTF8String],
-      other: mutable.HashSet[UTF8String]): mutable.HashSet[UTF8String] =
-    if (buf.size < other.size) other ++= buf else buf ++= other
+  override def merge(buf: DistinctSet, other: DistinctSet): DistinctSet =
+    if (buf.size < other.size) other.union(buf) else buf.union(other)
 
-  override def serialize(buf: mutable.HashSet[UTF8String]): Array[Byte] =
-    SketchWire.serialize(buf)
+  override def serialize(buf: DistinctSet): Array[Byte] = buf.serialize
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashSet[UTF8String] =
-    SketchWire.deserialize(bytes)
-
-  /** Add an owned copy of `s` unless already present. Not
-    * `UTF8String.clone()`: when the string spans its whole backing
-    * array, getBytes/clone return that array unchanged — aliasing the
-    * mutable row buffer. Copy unconditionally on first sighting.
-    */
-  protected final def addOwned(
-      buf: mutable.HashSet[UTF8String], s: UTF8String): Unit =
-    if (!buf.contains(s)) {
-      val arr = new Array[Byte](s.numBytes())
-      s.writeToMemory(arr, Platform.BYTE_ARRAY_OFFSET)
-      buf += UTF8String.fromBytes(arr)
-    }
+  override def deserialize(bytes: Array[Byte]): DistinctSet = DistinctSet.fromWire(bytes)
 }
 
 /** `sketch_agg(string) → binary`: the reference's distinct-count STATE
@@ -136,16 +176,13 @@ case class SketchAgg(
     inputAggBufferOffset: Int = 0)
     extends HashSetAggBase with UnaryLike[Expression] {
 
-  override def update(
-      buf: mutable.HashSet[UTF8String],
-      input: InternalRow): mutable.HashSet[UTF8String] = {
+  override def update(buf: DistinctSet, input: InternalRow): DistinctSet = {
     val v = child.eval(input)
-    if (v != null) addOwned(buf, v.asInstanceOf[UTF8String])
+    if (v != null) buf.add(v.asInstanceOf[UTF8String])
     buf
   }
 
-  override def eval(buf: mutable.HashSet[UTF8String]): Any =
-    SketchWire.serialize(buf)
+  override def eval(buf: DistinctSet): Any = buf.serialize
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
@@ -177,16 +214,13 @@ case class SketchMergeAgg(
     inputAggBufferOffset: Int = 0)
     extends HashSetAggBase with UnaryLike[Expression] {
 
-  override def update(
-      buf: mutable.HashSet[UTF8String],
-      input: InternalRow): mutable.HashSet[UTF8String] = {
+  override def update(buf: DistinctSet, input: InternalRow): DistinctSet = {
     val v = child.eval(input)
-    if (v != null) SketchWire.mergeInto(buf, v.asInstanceOf[Array[Byte]])
+    if (v != null) buf.mergeWire(v.asInstanceOf[Array[Byte]])
     buf
   }
 
-  override def eval(buf: mutable.HashSet[UTF8String]): Any =
-    SketchWire.serialize(buf)
+  override def eval(buf: DistinctSet): Any = buf.serialize
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = false

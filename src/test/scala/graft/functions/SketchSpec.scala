@@ -94,6 +94,17 @@ class SketchSpec extends SparkSpec {
     assert(e.getMessage != null)
   }
 
+  test("sketch_merge rejects a truncated sketch loudly") {
+    // header says two values, the bytes hold one
+    val truncated = Array[Byte](0, 0, 0, 2, 0, 0, 0, 1, 'a')
+    val e = intercept[Exception] {
+      Seq(truncated).toDF("sk").select(expr("sketch_merge(sk)")).collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.startsWith("not a graft sketch: ")), e)
+  }
+
   test("sketch_agg state survives the streaming state store across micro-batches") {
     // the q_stream_sketch contract in miniature: the SketchWire buffer
     // must round-trip through streaming-aggregation state between
